@@ -3,7 +3,9 @@
 ``write_star_tables`` writes the ten query tables (TPC-H-style star
 schema, ``events``, ``documents``, ``embeddings``) in the layout and
 types the registered queries read: one ``<table>.parquet`` file each,
-sized like the 0.1 scale factor. ``write_etl_inputs`` writes the raw
+with the row counts, column types, key and date ranges and category
+sets of the fixed scale-factor-0.1 tables, so the benchmark needs no
+data from outside its checkout. ``write_etl_inputs`` writes the raw
 files ``pipeline.star_schema.run_pipeline`` reads (FIXTURES.md
 sections 1-7, with the dirty values the parsers exist for) and returns
 the row and null counts each output table must have, derived from the

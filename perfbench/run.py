@@ -6,22 +6,23 @@ Workloads (closed loop, one client: each op starts when the previous
 one ends, like an analyst waiting for a reply):
 
 * ``star_queries`` -- 18 read-only star-schema, TPC-H-style and event
-  queries over seeded tables sized like scale factor 0.1. An op is one
-  ``queries()[name](spark, data_dir)`` builder call plus a ``noop``
-  write; a pass runs every query once, in a fixed order.
+  queries over seeded tables with the row counts, types and value ranges
+  of scale factor 0.1. An op is one ``queries()[name](spark, data_dir)``
+  builder call plus a ``noop`` write; a pass runs every query once, in an
+  order shuffled by the seed.
 * ``star_etl`` -- the reference ETL with writes. An op is one
   ``run_pipeline(spark, raw, fresh_out_dir, run_quality_checks=True)``
   over seeded raw inputs; a pass is one op.
 
 A run generates its inputs from ``--seed``, starts ``get_spark`` on
-``local[nproc]``, runs one untimed warm pass, then times whole passes
-until ``--seconds`` have elapsed. ``--seconds`` is a minimum: the loop
-always finishes the pass it is in, so every run times the same op mix
-(with 5 s, exactly one pass on a 4-core box: 18 queries, or one ETL run).
-Outputs are checked untimed: each query is compared with its DuckDB
-oracle in the warm pass, and each timed ETL op's output tables are read
-back with DuckDB after the loop and their row and null counts compared
-with the generator's.
+``local[nproc]`` with the program's own session settings, runs one
+untimed warm pass of the ops themselves, then times whole passes until
+``--seconds`` have elapsed. ``--seconds`` is a minimum: the loop always
+finishes the pass it is in, so every run times the same op mix. Outputs
+are checked untimed, after the loop: each query is collected and compared
+with its DuckDB oracle, and each ETL op's output tables are read back
+with DuckDB and their row and null counts compared with the generator's.
+An op that raised or whose output is wrong counts once in ``failed``.
 
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` runs the
 same loop, then a traced loop of the same length, and prints the
@@ -33,8 +34,10 @@ to ``.perfbench/runs/`` in the checkout.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
+import random
 import shutil
 import statistics
 import subprocess
@@ -69,11 +72,6 @@ STAR_QUERIES = [
     "conversion_funnel", "time_weighted_avg",
 ]
 ETL_FACT_ROWS = 250_000
-DRIVER_MEMORY = "2g"
-# The whole heap is committed and touched at start: with G1 growing it
-# adaptively, the JVM's peak RSS varied by 15-25% between identical
-# runs. peak_rss_mb then moves with off-heap and Python-side memory.
-JVM_OPTIONS = f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch"
 ETL_LAYERS = {
     "pipeline.build": [
         "build_staging_countries", "build_dim_countries", "build_fact_temperature",
@@ -84,6 +82,9 @@ ETL_LAYERS = {
     "sources.write": ["write_parquet", "write_parquet_partitioned"],
     "quality.check": ["expect_nonempty", "expect_no_nulls"],
 }
+# The spans whose Spark jobs are the plan's execution: a query's noop
+# write; the ETL's writes and quality gates.
+EXEC_SPANS = ("exec", "sources.write", "quality.check")
 
 
 def _median(values) -> float:
@@ -114,6 +115,31 @@ def _vm_hwm_mb(pid: int | str) -> float:
     return 0.0
 
 
+def _memory(spark) -> dict[str, float]:
+    """The driver's memory after the timed loop, in MB.
+
+    ``live_mb`` is what the session holds: JVM heap in use after a full
+    GC, JVM non-heap in use, and the Python driver's peak RSS. Peak RSS
+    itself is kept too, but it follows how far G1 happened to grow the
+    heap, which varied by a third between runs of one workload."""
+    jvm = spark._jvm
+    peak = {"jvm_peak_rss_mb": _vm_hwm_mb(jvm.ProcessHandle.current().pid()),
+            "python_peak_rss_mb": _vm_hwm_mb("self")}
+    bean = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    # Python-side garbage can still pin JVM objects through py4j (it held
+    # 130 MB of heap in 2 of 5 ETL runs), and the ContextCleaner
+    # frees blocks only after the GC that finds them unreachable.
+    gc.collect()
+    jvm.System.gc()
+    time.sleep(0.5)
+    jvm.System.gc()
+    heap = bean.getHeapMemoryUsage().getUsed() / 2**20
+    non_heap = bean.getNonHeapMemoryUsage().getUsed() / 2**20
+    return {**peak, "heap_live_mb": heap, "non_heap_mb": non_heap,
+            "live_mb": heap + non_heap + peak["python_peak_rss_mb"],
+            "peak_rss_mb": peak["jvm_peak_rss_mb"] + peak["python_peak_rss_mb"]}
+
+
 class StarQueries:
     """Read-only queries; one op = builder call + noop write."""
 
@@ -126,10 +152,12 @@ class StarQueries:
         self.input_rows = STAR_INPUT_ROWS
         registry = entry.queries()
         self.fns = {q: registry[q] for q in STAR_QUERIES}
-        self.wrong: set[str] = set()
+        self.order = random.Random(seed)
 
     def one_pass(self) -> list[str]:
-        return STAR_QUERIES
+        names = list(STAR_QUERIES)
+        self.order.shuffle(names)
+        return names
 
     def run(self, name: str, tracer: Tracer | None = None, op: int = 0) -> dict:
         fn = self.fns[name]
@@ -144,23 +172,25 @@ class StarQueries:
         return {"plan_ms": catalyst_ms(df)}
 
     def warm(self) -> None:
-        """The warm pass is the correctness pass: every query runs once in
-        full (collected) and is compared with its DuckDB oracle."""
+        for name in self.one_pass():
+            self.run(name)
+
+    def check(self, ops: list[str], failed: set[int]) -> set[int]:
+        """Collect each query that ran and compare it with its DuckDB
+        oracle; return the indices of the ops of the queries that differ."""
         con = compare.duck_connection(self.data)
         oracles = entry.oracle_sql()
-        for name in self.one_pass():
+        wrong = set()
+        for name in sorted(set(ops)):
             try:
                 problems = compare.compare_query(self.spark, con, self.fns[name], oracles[name], self.data)
             except Exception:
                 problems = [traceback.format_exc()]
             if problems:
                 print(f"check {name}: {problems}", file=sys.stderr)
-                self.wrong.add(name)
+                wrong.add(name)
         con.close()
-
-    def check(self, ops: list[str]) -> int:
-        """Timed ops whose query failed its oracle check."""
-        return sum(op in self.wrong for op in ops)
+        return {i for i, op in enumerate(ops) if op in wrong}
 
     def cleanup(self) -> None:
         """Nothing to remove: the inputs go with the run directory."""
@@ -206,25 +236,32 @@ class StarEtl:
         self.run("run_pipeline")
         self.cleanup()
 
-    def check(self, ops: list[str]) -> int:
-        """Read each op's output back with DuckDB; compare row and null
-        counts with the generator's; return the number of bad ops."""
-        failed = 0
+    def check(self, ops: list[str], failed: set[int]) -> set[int]:
+        """Read each op's output back with DuckDB and compare row and null
+        counts with the generator's; return the indices of the ops whose
+        output differs. Ops that already failed are skipped."""
+        wrong = set()
         con = duckdb.connect()
-        for out in self.outputs:
+        for i, out in enumerate(self.outputs):
+            if i in failed:
+                continue
             problems = []
             for table, want in self.expected.items():
                 nulls = ", ".join(f'count(*) - count("{c}")' for c in want["nulls"])
-                got = con.execute(
-                    f"SELECT count(*), {nulls} FROM read_parquet('{out}/{table}.parquet/**/*.parquet')"
-                ).fetchone()
+                try:
+                    got = con.execute(
+                        f"SELECT count(*), {nulls} FROM read_parquet('{out}/{table}.parquet/**/*.parquet')"
+                    ).fetchone()
+                except duckdb.Error as e:
+                    problems.append(f"{table}: {e}")
+                    continue
                 if list(got) != [want["rows"], *want["nulls"].values()]:
                     problems.append(f"{table}: got {got}, want {want}")
             if problems:
                 print(f"check {out}: {problems}", file=sys.stderr)
-                failed += 1
+                wrong.add(i)
         con.close()
-        return failed
+        return wrong
 
     def cleanup(self) -> None:
         for out in self.outputs:
@@ -245,8 +282,9 @@ WORKLOADS = {w.name: w for w in (StarQueries, StarEtl)}
 
 def _timed_loop(wl, seconds: float, tracer: Tracer | None = None, first_op: int = 0):
     """Whole passes until ``seconds`` have elapsed. Returns (op names,
-    latencies, per-op extras, failures, loop wall seconds)."""
-    names, lat, extras, failed = [], [], [], 0
+    latencies, per-op extras, indices of the ops that raised, loop wall
+    seconds); indices count from ``first_op``."""
+    names, lat, extras, failed = [], [], [], set()
     start = time.perf_counter()
     while True:
         for name in wl.one_pass():
@@ -255,7 +293,7 @@ def _timed_loop(wl, seconds: float, tracer: Tracer | None = None, first_op: int 
                 extra = wl.run(name, tracer, first_op + len(names))
             except Exception:
                 traceback.print_exc()
-                failed += 1
+                failed.add(first_op + len(names))
                 extra = {}
             lat.append(time.perf_counter() - t)
             names.append(name)
@@ -267,8 +305,8 @@ def _timed_loop(wl, seconds: float, tracer: Tracer | None = None, first_op: int 
 def _layer_metrics(wl, tracer: Tracer, log: EventLog, extras: list[dict], cores: int) -> dict:
     """Median-per-op layer numbers from the traced loop's spans.
 
-    ``exec`` is every Spark job of the op outside the ``plans`` builder: the
-    noop write for a query; the writes and gates for the ETL."""
+    Every ``exec.*`` figure, wall time and Spark jobs alike, comes from
+    the ``EXEC_SPANS`` of the op."""
     by_op: dict[int, list[dict]] = {}
     for rec in tracer.spans:
         by_op.setdefault(rec["op"], []).append(rec)
@@ -281,9 +319,8 @@ def _layer_metrics(wl, tracer: Tracer, log: EventLog, extras: list[dict], cores:
             return log.totals(s["id"] for s in spans if s["name"] in names)
 
         build = dur("plans.build")
-        exec_s = dur("exec") + dur("sources.write") + dur("quality.check")
-        ex = totals("op", "exec", "pipeline.build", "sources.write", "quality.check")
-        every = log.totals(s["id"] for s in spans)
+        exec_s = sum(dur(name) for name in EXEC_SPANS)
+        ex = totals(*EXEC_SPANS)
         rows.append({
             "wall": dur("op"),
             "plans.build_s": build,
@@ -295,11 +332,11 @@ def _layer_metrics(wl, tracer: Tracer, log: EventLog, extras: list[dict], cores:
             "exec.stages": ex["stages"],
             "exec.tasks": ex["tasks"],
             "exec.core_busy_share": ex["run_ms"] / (exec_s * 1000 * cores) if exec_s else 0.0,
-            "exec.cpu_ms": every["cpu_ms"],
-            "exec.shuffle_read_bytes": every["shuffle_read_bytes"],
-            "exec.shuffle_write_bytes": every["shuffle_write_bytes"],
-            "exec.spill_bytes": every["spill_bytes"],
-            "exec.scan_amplification": every["input_records"] / wl.input_rows,
+            "exec.cpu_ms": ex["cpu_ms"],
+            "exec.shuffle_read_bytes": ex["shuffle_read_bytes"],
+            "exec.shuffle_write_bytes": ex["shuffle_write_bytes"],
+            "exec.spill_bytes": ex["spill_bytes"],
+            "exec.scan_amplification": ex["input_records"] / wl.input_rows,
             "pipeline.build_s": dur("pipeline.build"),
             "sources.write_s": dur("sources.write"),
             "quality.check_s": dur("quality.check"),
@@ -317,7 +354,8 @@ def _layer_metrics(wl, tracer: Tracer, log: EventLog, extras: list[dict], cores:
 
 
 UNITS = {
-    "setup_s": "s", "latency_p50_s": "s", "ops_per_s": "1/s", "peak_rss_mb": "MB",
+    "setup_s": "s", "latency_p50_s": "s", "ops_per_s": "1/s", "live_mb": "MB",
+    "mem.peak_rss_mb": "MB",
     "session.start_s": "s", "session.warm_s": "s",
     "plans.build_s": "s", "plans.build_share": "ratio", "plans.py4j_calls": "count",
     "plans.build_jobs": "count",
@@ -388,9 +426,8 @@ def main(argv=None) -> int:
         "SPARK_LOCAL_DIRS": tmp,
         "PYTHONPATH": os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")])),
         "SPARK_GRAFT_CPUS": str(nproc),
-        "SPARK_GRAFT_DRIVER_MEM": DRIVER_MEMORY,
     })
-    conf = {"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} {JVM_OPTIONS}"}
+    conf = {"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}"}
     if args.trace:
         log_dir = os.path.join(run_dir, "eventlog")
         os.makedirs(log_dir)
@@ -422,14 +459,19 @@ def main(argv=None) -> int:
             t_names, t_lat, extras, t_failed, t_loop_s = _timed_loop(
                 wl, args.seconds, tracer, first_op=len(names))
             tracer.close()
-            names, failed = names + t_names, failed + t_failed
+            names, failed = names + t_names, failed | t_failed
             layers = {"exec.cached_bytes": cached_bytes(spark),
                       "trace.overhead": metrics["ops_per_s"] / (len(t_lat) / t_loop_s) - 1}
-        failed += wl.check(names)
+        # Memory is read before the check, whose collects are the
+        # benchmark's work, not the program's.
         java = spark._jvm.System.getProperty("java.version")
-        rss = {"jvm_mb": _vm_hwm_mb(spark._jvm.ProcessHandle.current().pid()),
-               "python_mb": _vm_hwm_mb("self")}
-        metrics["peak_rss_mb"] = rss["jvm_mb"] + rss["python_mb"]
+        mem = _memory(spark)
+        metrics["live_mb"] = mem["live_mb"]
+        if args.trace:
+            layers["mem.peak_rss_mb"] = mem["peak_rss_mb"]
+        t = time.perf_counter()
+        failed |= wl.check(names, failed)
+        check_s = time.perf_counter() - t
     finally:
         if wl is not None:
             wl.cleanup()
@@ -446,7 +488,9 @@ def main(argv=None) -> int:
         metrics = layers
 
     record = {"workload": args.workload, "seed": args.seed, "seconds": args.seconds,
-              "trace": args.trace, "env": env, "gen_s": gen_s, "rss": rss, "ops": names,
+              "trace": args.trace, "env": env, "start_s": start_s, "gen_s": gen_s, "warm_s": warm_s,
+              "loop_s": loop_s, "check_s": check_s, "memory": mem, "ops": names,
+              "failed_ops": sorted(failed),
               "latencies_s": lat, "metrics": metrics}
     with open(os.path.join(run_dir, "record.json"), "w") as f:
         json.dump(record, f, indent=1)
@@ -454,9 +498,9 @@ def main(argv=None) -> int:
         shutil.rmtree(os.path.join(run_dir, sub), ignore_errors=True)
     print(json.dumps({"env": env}), file=sys.stderr)
     print(json.dumps({
-        "correct": failed == 0,
+        "correct": not failed,
         "attempted": len(names),
-        "failed": min(failed, len(names)),
+        "failed": len(failed),
         "metrics": {k: {"value": v, "unit": UNITS[k]} for k, v in sorted(metrics.items())},
     }))
     return 0
