@@ -127,13 +127,18 @@ def _memory(spark) -> dict[str, float]:
             "python_peak_rss_mb": _vm_hwm_mb("self")}
     bean = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
     # Python-side garbage can still pin JVM objects through py4j (it held
-    # 130 MB of heap in 2 of 5 ETL runs), and the ContextCleaner
-    # frees blocks only after the GC that finds them unreachable.
-    gc.collect()
-    jvm.System.gc()
-    time.sleep(0.5)
-    jvm.System.gc()
-    heap = bean.getHeapMemoryUsage().getUsed() / 2**20
+    # 130 MB of heap in 2 of 5 ETL runs), and the ContextCleaner frees
+    # blocks only after a GC has found them unreachable, so collect until
+    # the heap stops shrinking.
+    heap = float("inf")
+    for _ in range(5):
+        gc.collect()
+        jvm.System.gc()
+        used = bean.getHeapMemoryUsage().getUsed() / 2**20
+        if used > heap - 1:
+            break
+        heap = used
+        time.sleep(0.5)
     non_heap = bean.getNonHeapMemoryUsage().getUsed() / 2**20
     return {**peak, "heap_live_mb": heap, "non_heap_mb": non_heap,
             "live_mb": heap + non_heap + peak["python_peak_rss_mb"],
