@@ -493,8 +493,8 @@ def main(argv=None) -> int:
         cpu_s, loop_steal = _tree_cpu_s() - cpu_s, _steal_pct(host0, _cpu_times())
         # While other guests took 5-14% of a 4-vCPU host's CPU, wall times
         # of one workload spread by up to 37% (interquartile range over the
-        # median, ten seeds); CPU seconds per op spread by 6% (queries) and
-        # 10% (ETL). So the bounded metric is CPU seconds per op; wall
+        # median, ten seeds); CPU seconds per op spread by at most 11% in
+        # any series. So the bounded metric is CPU seconds per op; wall
         # latency and throughput are reported with the traced run's metrics.
         metrics = {"setup_s": setup_s, "cpu_s_per_op": cpu_s / len(lat)}
         wall = {"wall.latency_p50_s": _median(lat), "wall.ops_per_s": len(lat) / loop_s}
