@@ -52,7 +52,12 @@ from data_engineering_capstone_project_spark.functions.parsing import (
     parse_iso_code,
     parse_port_of_entry_line,
 )
-from data_engineering_capstone_project_spark.quality import expect_no_nulls, expect_nonempty
+from data_engineering_capstone_project_spark.quality import (
+    check_observed,
+    expect_no_nulls,
+    expect_nonempty,
+    observe_quality,
+)
 from data_engineering_capstone_project_spark.sources import (
     read_csv,
     read_literal_rows,
@@ -86,6 +91,9 @@ class PipelineResult:
     # Tables whose write was skipped because the resume manifest
     # already records a committed output (resume=True runs only).
     resumed: list[str] = field(default_factory=list)
+    # {table: {"rows": n, "nulls_<col>": k}} for each table written in
+    # this run, observed by the write job itself.
+    quality: dict[str, dict[str, int]] = field(default_factory=dict)
 
 
 # ---------------------------------------------------------------------------
@@ -480,6 +488,16 @@ def run_pipeline(
     run the ported quality gates. Missing optional inputs (the
     temperature blob) skip their stage and are reported, not fatal.
 
+    Each written table's gate (Q2 row count, Q1 NULLs in its
+    ``QUALITY_CHECKS`` column) is computed by the job that writes it
+    (``quality.observe_quality``) and recorded in ``result.quality``.
+    A failing gate raises DataQualityError right after that table's
+    write, before later tables are written; the failed table is not
+    added to the resume manifest, so a ``resume=True`` rerun rewrites
+    it. Tables not written in this run (no ``output_path``, or resumed)
+    are gated with ``expect_nonempty`` / ``expect_no_nulls``, which
+    rebuild the table from the raw inputs.
+
     ``resume=True`` restores the retry semantics the reference's
     Airflow DAG had (dag_immigration.py:355-386: each load is its own
     retryable task): a success manifest in ``output_path`` records
@@ -513,21 +531,27 @@ def run_pipeline(
 
     if output_path:
         manifest = _load_manifest(output_path) if resume else {}
+        gated = dict(QUALITY_CHECKS)
         for name, df in t.items():
             if name in manifest:
                 result.resumed.append(name)
                 continue
+            column = gated.get(name)
+            observed, obs = observe_quality(df, [column] if column else [])
             if name == "fact_immigration":
                 # K2: partition by the dominant filter axes (reference
                 # :459-460) -> partition pruning for the declared queries.
-                write_parquet_partitioned(df, f"{output_path}/{name}.parquet", ["year", "month"])
+                write_parquet_partitioned(observed, f"{output_path}/{name}.parquet", ["year", "month"])
             else:
-                write_parquet(df, f"{output_path}/{name}.parquet")
+                write_parquet(observed, f"{output_path}/{name}.parquet")
+            result.quality[name] = check_observed(
+                obs, name, gate=run_quality_checks and column is not None
+            )
             _mark_complete(output_path, manifest, name)
 
     if run_quality_checks:
         for name, column in QUALITY_CHECKS:
-            if name not in t:
+            if name not in t or name in result.quality:
                 continue
             expect_nonempty(t[name], name)
             expect_no_nulls(t[name], [column], name)

@@ -6,6 +6,12 @@ against Redshift. Here the same checks are DataFrame aggregations, and
 the per-column null counts are computed in ONE pass (a single job with
 conditional sums) instead of one COUNT(*) query per column -- at 100 TB
 the reference's per-column scan loop would re-read the table N times.
+
+A table being written needs no scan of its own: ``observe_quality``
+attaches the gate's counts to the write job and ``check_observed`` raises
+on them afterwards (``run_pipeline`` does this for every table it
+writes). ``perfbench/run.py --workload star_etl --trace 1`` reports the
+jobs the separate gates still start as ``quality.jobs``.
 """
 
 from __future__ import annotations
@@ -13,7 +19,7 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Identifiers in generated SQL are config-owned, but allowlist anyway
@@ -122,44 +128,35 @@ def expect_unique(df: DataFrame, columns: Sequence[str], table: str = "?") -> No
         )
 
 
-def observed_write_parquet(
-    df: DataFrame,
-    path: str,
-    require_nonempty_cols: Sequence[str] = (),
-    table: str = "?",
-) -> dict[str, int]:
-    """Write + quality gate in ONE scan via ``df.observe``: the row
-    count and per-column null counts are accumulated by the SAME job
-    that writes the parquet, then asserted afterwards — where
-    ``expect_no_nulls`` + ``expect_nonempty`` + write would scan the
-    input three times (the difference between one pass and three over
-    a 100 TB stage output). Raises DataQualityError AFTER the write if
-    a gate fails (the caller owns cleanup/quarantine of the written
-    path — observation can't veto rows already streamed to the sink).
-    Returns the observed metrics."""
-    from pyspark.sql import Observation
-
-    for c in require_nonempty_cols:
-        if not _IDENT.match(c):
-            raise ValueError(f"bad column identifier: {c}")
-    obs = Observation(f"quality:{table}")
+def observe_quality(
+    df: DataFrame, columns: Sequence[str] = ()
+) -> tuple[DataFrame, Observation]:
+    """Attach the Q1/Q2 metrics to ``df``: ``rows`` and ``nulls_<col>``
+    for each column. Whatever action runs the returned DataFrame (the
+    table's write) computes them in the same job, so the gate costs no
+    extra scan. Each call makes a fresh unnamed Observation, so two
+    pipelines in one session never register the same name."""
+    obs = Observation()
     observed = df.observe(
         obs,
         F.count(F.lit(1)).alias("rows"),
-        *[
-            F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}")
-            for c in require_nonempty_cols
-        ],
+        *[F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in columns],
     )
-    observed.write.mode("overwrite").parquet(path)
+    return observed, obs
+
+
+def check_observed(obs: Observation, table: str = "?", gate: bool = True) -> dict[str, int]:
+    """Read the metrics of ``observe_quality`` once the action has run
+    and return them. With ``gate``, raise DataQualityError with the
+    ``expect_nonempty`` / ``expect_no_nulls`` messages if the table is
+    empty or a column has NULLs; the rows are already written by then,
+    so the caller owns any cleanup of the output."""
     metrics = {k: int(v or 0) for k, v in obs.get.items()}
+    if not gate:
+        return metrics
     if metrics["rows"] < 1:
         raise DataQualityError(f"Data quality check failed. {table} is empty")
-    bad = {
-        c: metrics[f"nulls_{c}"]
-        for c in require_nonempty_cols
-        if metrics[f"nulls_{c}"] > 0
-    }
+    bad = {k.removeprefix("nulls_"): n for k, n in metrics.items() if k != "rows" and n > 0}
     if bad:
         raise DataQualityError(
             f"Data quality check failed. {table} contains NULLs: {bad}"

@@ -4,10 +4,12 @@ import pytest
 
 from data_engineering_capstone_project_spark.quality import (
     DataQualityError,
+    check_observed,
     expect_no_nulls,
     expect_nonempty,
     expect_unique,
     null_counts,
+    observe_quality,
 )
 
 
@@ -54,27 +56,68 @@ def test_expect_max_length(spark):
         expect_max_length(df, {"a": 2}, table="t")
 
 
+def _observed_write(df, path, columns, table, partition_by=()):
+    observed, obs = observe_quality(df, columns)
+    observed.write.partitionBy(*partition_by).mode("overwrite").parquet(path)
+    return check_observed(obs, table)
+
+
 def test_observed_write_single_pass(spark, tmp_path):
-    """observe()-based gate: metrics come from the write job itself;
-    clean data passes, a NULL column fails AFTER the write."""
-    from data_engineering_capstone_project_spark.quality import (
-        DataQualityError,
-        observed_write_parquet,
-    )
+    """observe()-based gate: metrics come from the write job itself,
+    flat or partitioned; clean data passes, a NULL column fails AFTER
+    the write."""
+    schema = "id bigint, name string, part int"
+    good = spark.createDataFrame([(1, "a", 0), (2, "b", 1)], schema)
+    bad = spark.createDataFrame([(1, "a", 0), (None, "b", 1)], schema)
+    tracker = spark.sparkContext.statusTracker()
+    for partition_by in [(), ("part",)]:
+        out = str(tmp_path / f"good{len(partition_by)}")
+        jobs_before = set(tracker.getJobIdsForGroup())
+        m = _observed_write(good, out, ["id", "name"], "good", partition_by)
+        assert m == {"rows": 2, "nulls_id": 0, "nulls_name": 0}
+        assert len(set(tracker.getJobIdsForGroup()) - jobs_before) == 1
+        assert spark.read.parquet(out).count() == 2
 
-    good = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id bigint, name string"
-    )
-    out = str(tmp_path / "good")
-    m = observed_write_parquet(good, out, ["id", "name"], table="good")
-    assert m["rows"] == 2 and m["nulls_id"] == 0
-    assert spark.read.parquet(out).count() == 2
+        out = str(tmp_path / f"bad{len(partition_by)}")
+        with pytest.raises(DataQualityError, match=r"bad contains NULLs: \{'id': 1\}"):
+            _observed_write(bad, out, ["id"], "bad", partition_by)
+        # The gate fires after the write: the rows are on disk.
+        assert spark.read.parquet(out).count() == 2
 
-    bad = spark.createDataFrame(
-        [(1, "a"), (None, "b")], "id bigint, name string"
-    )
-    with pytest.raises(DataQualityError, match="NULL"):
-        observed_write_parquet(bad, str(tmp_path / "bad"), ["id"], table="bad")
+
+def _empty_inputs(spark):
+    schema = "id bigint, name string"
+    return {
+        "filtered": spark.createDataFrame([(1, "a")], schema).filter("id > 1"),
+        "empty_list": spark.createDataFrame([], schema),
+        "zero_partitions": spark.createDataFrame(spark.sparkContext.emptyRDD(), schema),
+    }
+
+
+@pytest.mark.parametrize("case", ["filtered", "empty_list", "zero_partitions"])
+def test_observed_gate_empty_input_raises(spark, tmp_path, case):
+    """An empty write still reports rows=0 (obs.get does not block) and
+    the gate raises the expect_nonempty message."""
+    df = _empty_inputs(spark)[case]
+    if case == "zero_partitions":
+        assert df.rdd.getNumPartitions() == 0
+    observed, obs = observe_quality(df, ["name"])
+    observed.write.mode("overwrite").parquet(str(tmp_path / case))
+    assert check_observed(obs, case, gate=False) == {"rows": 0, "nulls_name": 0}
+    with pytest.raises(DataQualityError, match=f"{case} is empty"):
+        check_observed(obs, case)
+
+
+def test_observations_are_fresh_per_call(spark, tmp_path):
+    """Two gates on one table name in one session keep their own
+    metrics, even when both observed frames meet in one plan."""
+    a, obs_a = observe_quality(spark.range(3).selectExpr("id", "'x' AS name"), ["name"])
+    b, obs_b = observe_quality(spark.range(5).selectExpr("id", "CAST(NULL AS STRING) AS name"), ["name"])
+    a.unionByName(b).write.mode("overwrite").parquet(str(tmp_path / "t"))
+    assert check_observed(obs_a, "t") == {"rows": 3, "nulls_name": 0}
+    with pytest.raises(DataQualityError, match="contains NULLs"):
+        check_observed(obs_b, "t")
+    assert check_observed(obs_b, "t", gate=False) == {"rows": 5, "nulls_name": 5}
 
 
 def test_fk_violations_detects_orphans_and_nulls(spark, tmp_path):
